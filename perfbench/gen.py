@@ -1,15 +1,12 @@
-"""Seeded input generators for the benchmark workloads.
+"""Seeded input generator for the ``elt_medallion`` workload.
 
 Everything here is plain numpy/pyarrow and runs before any timing starts.
 The same ``seed`` always yields byte-identical inputs.
 
-- :func:`star_tables` writes the TPC-H-shaped star schema plus the
-  ``events``, ``documents`` and ``embeddings`` tables that the query
-  registry reads (same column names, types and value domains as the
-  fixtures the registry's DuckDB oracles were written against).
-- :func:`civil_cases` writes a civil-cases landing TSV in the reference's
-  46-column layout and returns what the generator knows about it: the row
-  count, the expected dimension tables and the CDC day applied on top.
+:func:`civil_cases` writes a civil-cases landing TSV in the reference's
+46-column layout plus the CDC batches of one incremental day, and returns
+what the generator knows about them: the row count, the expected dimension
+tables and the post-CDC table keyed by DOCKET.
 """
 
 from __future__ import annotations
@@ -21,163 +18,12 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 import pyarrow.csv as pacsv
-import pyarrow.parquet as pq
-
-#: row counts per unit of scale factor (sf0.1 = 600k lineitem rows)
-_PER_SF = {
-    "customer": 150_000,
-    "supplier": 10_000,
-    "part": 200_000,
-    "orders": 1_500_000,
-    "lineitem": 6_000_000,
-    "events": 1_000_000,
-    "documents": 50_000,
-}
-
-#: embeddings rows at the fixture scale factors. The semdedup entries pin
-#: their cell count K in the oracle SQL, and auto-K is a function of this
-#: count, so only these sizes keep the registry's oracles valid.
-_EMBEDDINGS = {0.001: 500, 0.01: 500, 0.1: 2000}
-
-_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-_PTYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
-_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-_WORDS = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
-_LANGS = ["en", "de", "es", "fr", "zh"]
-_LANG_P = [0.41, 0.15, 0.15, 0.145, 0.145]
 
 
 def _days(rng, n: int, start: dt.date, end: dt.date) -> np.ndarray:
     span = (end - start).days
     base = np.datetime64(start, "D")
     return (base + rng.integers(0, span + 1, n)).astype("datetime64[us]")
-
-
-def _money(rng, n: int, lo: float, hi: float) -> np.ndarray:
-    return rng.integers(int(lo * 100), int(hi * 100) + 1, n) / 100.0
-
-
-def _write(out_dir: str, name: str, cols: dict) -> int:
-    table = pa.table(cols)
-    pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return table.num_rows
-
-
-def star_tables(out_dir: str, sf: float, seed: int) -> dict[str, int]:
-    """Write the ten registry tables at scale ``sf``; returns row counts."""
-    if sf not in _EMBEDDINGS:
-        raise ValueError(f"sf must be one of {sorted(_EMBEDDINGS)}, got {sf}")
-    os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng(seed)
-    n = {k: max(1, int(round(v * sf))) for k, v in _PER_SF.items()}
-    counts = {}
-    counts["region"] = _write(out_dir, "region", {
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": _REGIONS,
-    })
-    counts["nation"] = _write(out_dir, "nation", {
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    c = n["customer"]
-    counts["customer"] = _write(out_dir, "customer", {
-        "c_custkey": np.arange(c, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(c)],
-        "c_nationkey": pa.array(rng.integers(0, 25, c), pa.int32()),
-        "c_acctbal": _money(rng, c, -999.99, 9999.99),
-        "c_mktsegment": np.array(_SEGMENTS)[rng.integers(0, 5, c)],
-    })
-    s = n["supplier"]
-    counts["supplier"] = _write(out_dir, "supplier", {
-        "s_suppkey": np.arange(s, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(s)],
-        "s_nationkey": pa.array(rng.integers(0, 25, s), pa.int32()),
-        "s_acctbal": _money(rng, s, -999.99, 9999.99),
-    })
-    p = n["part"]
-    names = np.array([f"{a} {b}" for a in _ADJ for b in _NOUN])
-    counts["part"] = _write(out_dir, "part", {
-        "p_partkey": np.arange(p, dtype=np.int64),
-        "p_name": names[rng.integers(0, len(names), p)],
-        "p_brand": np.array([f"Brand#{i}" for i in range(1, 26)])[
-            rng.integers(0, 25, p)
-        ],
-        "p_type": np.array(_PTYPES)[rng.integers(0, 6, p)],
-        "p_size": pa.array(rng.integers(1, 51, p), pa.int32()),
-        "p_retailprice": 900.0 + (np.arange(p) % 1000) / 10.0,
-    })
-    o = n["orders"]
-    counts["orders"] = _write(out_dir, "orders", {
-        "o_orderkey": np.arange(o, dtype=np.int64),
-        "o_custkey": rng.integers(0, c, o),
-        "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, o)],
-        "o_totalprice": _money(rng, o, 1000.0, 500000.0),
-        "o_orderdate": _days(rng, o, dt.date(1995, 1, 1), dt.date(2001, 8, 1)),
-        "o_orderpriority": np.array(_PRIORITIES)[rng.integers(0, 5, o)],
-    })
-    li = n["lineitem"]
-    flag = rng.integers(0, 6, li)
-    counts["lineitem"] = _write(out_dir, "lineitem", {
-        "l_orderkey": rng.integers(0, o, li),
-        "l_partkey": rng.integers(0, p, li),
-        "l_suppkey": rng.integers(0, s, li),
-        "l_linenumber": pa.array(rng.integers(1, 8, li), pa.int32()),
-        "l_quantity": rng.integers(1, 51, li).astype(np.float64),
-        "l_extendedprice": _money(rng, li, 900.0, 105000.0),
-        "l_discount": rng.integers(0, 11, li) / 100.0,
-        "l_tax": rng.integers(0, 9, li) / 100.0,
-        "l_returnflag": np.array(["A", "N", "R"])[flag % 3],
-        "l_linestatus": np.array(["F", "O"])[flag // 3],
-        "l_shipdate": _days(rng, li, dt.date(1995, 1, 2), dt.date(2001, 11, 4)),
-    })
-    e = n["events"]
-    ts = np.sort(rng.integers(0, 30 * 86400 * 10**6, e))
-    counts["events"] = _write(out_dir, "events", {
-        "event_id": np.arange(e, dtype=np.int64),
-        "ts": pa.array(
-            np.datetime64("2024-01-01", "us") + ts.astype("timedelta64[us]"),
-            pa.timestamp("us"),
-        ),
-        "user_id": rng.integers(0, 1500, e),
-        "event_type": np.array(_EVENT_TYPES)[rng.integers(0, 5, e)],
-        "value": np.round(rng.exponential(40.0, e), 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, e)],
-    })
-    d = n["documents"]
-    texts = []
-    for i in range(d):
-        if i >= 20 and rng.random() < 0.05:
-            # exact copy of an earlier document plus a marker token — the
-            # near-duplicate class the dedup entries exist to find
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-            continue
-        words = np.array(_WORDS)[rng.integers(0, len(_WORDS), rng.integers(8, 100))]
-        texts.append(" ".join(words))
-    counts["documents"] = _write(out_dir, "documents", {
-        "doc_id": np.arange(d, dtype=np.int64),
-        "text": texts,
-        "lang": np.array(_LANGS)[rng.choice(5, d, p=_LANG_P)],
-        "source": [f"src{i % 20}" for i in range(d)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    })
-    v = _EMBEDDINGS[sf]
-    vecs = rng.standard_normal((v, 64)).astype(np.float32)
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    counts["embeddings"] = _write(out_dir, "embeddings", {
-        "vec_id": np.arange(v, dtype=np.int64),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, v), pa.int32()),
-    })
-    return counts
 
 
 # --------------------------------------------------------------------------
@@ -204,8 +50,9 @@ class CivilCases:
     #: dim table name -> set of (code, decoded name or None)
     dims: dict[str, set] = field(default_factory=dict)
     cdc: list[CdcBatch] = field(default_factory=list)
-    #: DOCKET keys live after every CDC batch is applied
-    final_keys: set = field(default_factory=set)
+    #: DOCKET -> STATUSCD (None for the sentinel) of every case live after
+    #: the CDC batches: updates set 'L', deletes remove, inserts add
+    final_status: dict = field(default_factory=dict)
 
 
 def _date_strings(rng, n: int) -> np.ndarray:
@@ -280,12 +127,22 @@ def _expected_dims(cols: dict[str, np.ndarray]) -> dict[str, set]:
     return out
 
 
+def _status_by_docket(cols: dict[str, np.ndarray]) -> dict:
+    """DOCKET -> STATUSCD as the quality zone types it (sentinel -> None)."""
+    from data_engineer_development_spark.medallion import QUALITY_SPEC
+
+    sentinels = next(s for name, _, s in QUALITY_SPEC if name == "STATUSCD")
+    return {int(d): (None if st in sentinels else st)
+            for d, st in zip(cols["DOCKET"], cols["STATUSCD"])}
+
+
 def civil_cases(
     out_dir: str, rows: int, seed: int, cdc_batches: int, cdc_frac: float
 ) -> CivilCases:
     """Write the landing TSV (``rows`` cases) and ``cdc_batches`` CDC
     batches, each updating and deleting ``cdc_frac`` of the cases inside
-    one random DOCKET window and inserting as many new cases."""
+    one random DOCKET window and inserting as many new cases. An update
+    sets STATUSCD to 'L'."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(seed)
     dockets = np.arange(100_000, 100_000 + rows, dtype=np.int64)
@@ -294,14 +151,14 @@ def civil_cases(
     size = _write_tsv(path, cols)
     cc = CivilCases(path, rows, size, _expected_dims(cols))
 
-    live = set(int(d) for d in dockets)
-    original = sorted(live)
+    status = _status_by_docket(cols)
+    original = sorted(status)
     next_key = int(dockets[-1]) + 1
     per_batch = max(1, int(rows * cdc_frac))
     window = min(rows, per_batch * 8)
     for b in range(cdc_batches):
         lo = int(rng.integers(0, rows - window + 1))
-        in_window = [k for k in original[lo:lo + window] if k in live]
+        in_window = [k for k in original[lo:lo + window] if k in status]
         picks = rng.permutation(len(in_window))[: 2 * per_batch]
         chosen = [in_window[i] for i in picks]
         updates = sorted(chosen[:per_batch])
@@ -309,11 +166,14 @@ def civil_cases(
         new_keys = np.arange(next_key, next_key + per_batch, dtype=np.int64)
         next_key += per_batch
         ins_path = os.path.join(out_dir, f"cdc_{b}_inserts.tsv")
-        _write_tsv(ins_path, _landing_columns(rng, new_keys))
+        ins_cols = _landing_columns(rng, new_keys)
+        _write_tsv(ins_path, ins_cols)
         cc.cdc.append(
             CdcBatch(updates, deletes, ins_path, [int(k) for k in new_keys])
         )
-        live -= set(deletes)
-        live |= set(int(k) for k in new_keys)
-    cc.final_keys = live
+        status.update(dict.fromkeys(updates, "L"))
+        for k in deletes:
+            del status[k]
+        status.update(_status_by_docket(ins_cols))
+    cc.final_status = status
     return cc

@@ -9,10 +9,13 @@ from __future__ import annotations
 
 import statistics
 
-#: registry modules corpus_curation calls
+#: registry modules corpus_curation calls: the operator pipelines, then
+#: the read mix's relational modules
 QUERY_MODULES = (
     "similarity", "dedup", "corpus_ops", "sketch_ops", "behavior",
-    "warehouse_ops",
+    "warehouse_ops", "contrastive", "training_mix",
+    "relational_ext", "relational_more", "analytics", "core", "scalar_ops",
+    "timeseries",
 )
 
 _SPARK = (

@@ -17,6 +17,8 @@ kept in ``.perfbench/results/``, the rest is removed at exit.
 from __future__ import annotations
 
 import argparse
+import glob
+import hashlib
 import json
 import os
 import shutil
@@ -29,6 +31,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PACKAGE = "data_engineer_development_spark"
 WORKLOAD_NAMES = ("elt_medallion", "corpus_curation")
+#: the end-to-end metrics of the final JSON line (BENCHMARK.json); the
+#: others are printed as text and kept in the artifact
+REPORTED = ("setup_s", "wall_s", "rows_per_s")
 #: cap on the driver JVM heap; the engine's default (24g) exceeds small hosts
 DRIVER_MEM_MB = 4096
 
@@ -95,7 +100,7 @@ def _make_workload(name: str, data_dir: str, seed: int, work: str):
     cls = WORKLOADS[name]
     if cls is EltMedallion:
         return cls(data_dir, seed, os.path.join(work, "elt"))
-    return cls(data_dir, seed)
+    return cls(seed)
 
 
 def _tail(values: list[float]) -> tuple[float, float, int]:
@@ -192,8 +197,10 @@ def _run(args, base: str, work: str) -> int:
     for msg in raised + mismatches:
         print(f"FAILED {msg}")
 
+    source = _source_digest()
     artifact = {
         "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
+        "source": source,
         "trace": args.trace, "cpus": _cpus(), "inputs": inputs,
         "load_avg_start": load_start, "load_avg_end": loadavg(),
         "setups": setups, "pass_walls_s": walls,
@@ -208,17 +215,15 @@ def _run(args, base: str, work: str) -> int:
 
         metrics = per_layer(runner, setups, layer, len(walls))
         artifact["per_layer"] = metrics
-        untraced = _artifact_path(base, args, trace=0)
-        if os.path.exists(untraced):
-            with open(untraced) as f:
-                ref = json.load(f)["end_to_end"]["wall_s"]["value"]
-            over = e2e["wall_s"][0] - ref
-            artifact["tracing_overhead"] = {"wall_s": over, "share": over / ref}
-            print(f"tracing overhead: {over:+.3f} s wall_s ({over / ref:+.1%}) "
-                  "against the untraced run of this seed")
+        overhead = _tracing_overhead(base, args, source, e2e["wall_s"][0])
+        if overhead:
+            artifact["tracing_overhead"] = overhead
+            print(f"tracing overhead: {overhead['wall_s']:+.3f} s wall_s "
+                  f"({overhead['share']:+.1%}) against the untraced run of "
+                  "this seed, --seconds and source")
         out_metrics = {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}
     else:
-        out_metrics = {k: {"value": v, "unit": u} for k, (v, u) in e2e.items()}
+        out_metrics = {k: {"value": e2e[k][0], "unit": e2e[k][1]} for k in REPORTED}
 
     os.makedirs(os.path.join(base, "results"), exist_ok=True)
     with open(_artifact_path(base, args, args.trace), "w") as f:
@@ -232,8 +237,8 @@ def end_to_end(wl, runner, setups: list[dict], walls: list[float],
                rss_mb: float) -> dict[str, tuple[float, str]]:
     """The end-to-end metrics as (value, unit). ``rows_per_s`` is, for
     elt_medallion, landing rows per second of the full-load pipeline op;
-    for corpus_curation, rows of the generated input tables per second of
-    a pass."""
+    for corpus_curation, the rows a pass reads (each entry's input tables)
+    per second of a pass."""
     ops = [s.wall_s for s in runner.spans]
     pipe = [s.wall_s for s in runner.spans if s.name == "pipeline.run"]
     return {
@@ -241,7 +246,7 @@ def end_to_end(wl, runner, setups: list[dict], walls: list[float],
         "wall_s": (statistics.median(walls), "s"),
         "op_p50_s": (statistics.median(ops), "s"),
         "op_tail_s": (_tail(ops)[0], "s"),
-        "rows_per_s": (wl.fixture_rows / statistics.median(pipe or walls), "rows/s"),
+        "rows_per_s": (wl.throughput_rows / statistics.median(pipe or walls), "rows/s"),
         "peak_rss_mb": (rss_mb, "MB"),
     }
 
@@ -254,6 +259,31 @@ def _span_row(s) -> dict:
                    jobs=s.jobs, build_jobs=s.build_jobs)
     row.update(s.counters)
     return row
+
+
+def _source_digest() -> str:
+    """SHA-256 over the benchmark's and the engine's Python sources."""
+    h = hashlib.sha256()
+    for d in (HERE, os.path.join(ROOT, PACKAGE)):
+        for path in sorted(glob.glob(os.path.join(d, "**", "*.py"), recursive=True)):
+            h.update(os.path.relpath(path, ROOT).encode())
+            with open(path, "rb") as f:
+                h.update(f.read())
+    return h.hexdigest()
+
+
+def _tracing_overhead(base: str, args, source: str, wall_s: float) -> dict | None:
+    """Traced minus untraced ``wall_s``, only against an untraced artifact
+    of the same workload, seed, ``--seconds`` and source digest."""
+    path = _artifact_path(base, args, trace=0)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        ref = json.load(f)
+    if ref.get("source") != source or ref["seconds"] != args.seconds:
+        return None
+    over = wall_s - ref["end_to_end"]["wall_s"]["value"]
+    return {"wall_s": over, "share": over / ref["end_to_end"]["wall_s"]["value"]}
 
 
 def _artifact_path(base: str, args, trace: int) -> str:

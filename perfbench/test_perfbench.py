@@ -62,7 +62,7 @@ def traced(spark):
     for name, cls in TINY.items():
         data = os.path.join(work, name, "data")
         wl = (cls(data, 7, os.path.join(work, name, "elt"))
-              if issubclass(cls, workloads.EltMedallion) else cls(data, 7))
+              if issubclass(cls, workloads.EltMedallion) else cls(7))
         wl.generate()
         wl.warm_up(session)
         runner = workloads.Runner(session, traced=True)
@@ -88,6 +88,17 @@ def test_every_job_attributed_to_exactly_one_op(traced, name):
     covered = [j for s in spans for j in range(s.first_job, s.end_job)]
     assert covered == list(range(spans[0].first_job, spans[-1].end_job))
     assert all(s.jobs > 0 for s in spans if s.name != "channel.publish")
+
+
+def test_read_mix_runs_only_footer_jobs_at_build(traced):
+    """The read mix's membership rule: no data-dependent job at build time
+    (a schema-less parquet read runs one footer job per table)."""
+    _, runner, _ = traced["corpus_curation"]
+    reads = [s for s in runner.spans
+             if s.name in workloads.CorpusCuration.read_entries]
+    assert len(reads) == 2 * len(workloads.CorpusCuration.read_entries)
+    for s in reads:
+        assert s.build_jobs == s.counters["schema_jobs"], s.name
 
 
 @pytest.mark.parametrize("name", run.WORKLOAD_NAMES)
@@ -116,6 +127,7 @@ def test_every_declared_metric_is_emitted_with_its_unit(traced):
     for m in BENCHMARK["per_layer"]:
         assert layer[m["name"]][1] == m["unit"]
     e2e = run.end_to_end(wl, runner, setups, [1.0, 1.0], 100.0)
+    assert [m["name"] for m in BENCHMARK["end_to_end"]] == list(run.REPORTED)
     for m in BENCHMARK["end_to_end"]:
         assert e2e[m["name"]][1] == m["unit"]
         assert e2e[m["name"]][0] > 0
