@@ -14,6 +14,25 @@ Scale stance:
   pseudo-random hyperplanes; candidates share a bucket (equi-join), turning
   100 TB all-pairs into per-bucket work. An IVF variant would swap the
   random planes for k-means centroids — same join shape.
+
+The SemDeDup family (``semdedup``, ``semdedup_incremental``,
+``semdedup_sharded``, the recall evals and the streaming near-dup gate)
+has ONE production implementation per kernel: the Arrow quantizer
+(``_with_quantized``), the numpy cell scorer (``_assign_cells``), the
+Lloyd loop (``_lloyd_rounds``) and the per-cell dedup kernel
+(``_dedup_cells``). Scorer and Lloyd loop take codebooks keyed by shard;
+the unsharded entries are the one-shard case (key ``None``). The JVM
+higher-order-function quantizer and the literal-codebook argmax survive
+only as test oracles (tests/test_semdedup.py).
+
+Seeding is the one deliberate exception: ``semdedup`` keeps its own
+``_seed_codebook`` (ORDER BY id LIMIT K over the width-filtered pool)
+instead of ``semdedup_sharded``'s windowed rank. The rank would add a
+shuffle to the one-shard case, and with ``dims=None`` on a mixed-width
+corpus the two pick different codebooks: ``_seed_codebook`` takes the K
+lowest usable ids and then drops those off the first one's width, while
+the sharded seeding filters to that width first and then ranks. Every
+production caller passes ``dims``, where the two rules agree.
 """
 
 from __future__ import annotations
@@ -25,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from data_engineer_development_spark.cache import track_persist
 from data_engineer_development_spark.functions.portable_hash import hyperplane
@@ -329,11 +349,11 @@ _LONG_MIN = -(1 << 63)
 
 def _quantize_rows(embs, np=np):
     """(qv_list, qn_list) for a sequence of embedding arrays — the int8
-    max-abs grid, numerically IDENTICAL to the JVM HOF formulation: each
-    element is ``floor(cast(x as double) * 127.0 / mx + 0.5)`` with the
-    same IEEE operation order, ``mx`` is an exact max (order-free), and
-    ``qn`` an exact int64 sum of squares. Rows are grouped by width so
-    the arithmetic is one vectorized pass per distinct width."""
+    max-abs grid: each element is ``floor(cast(x as double) * 127.0 / mx
+    + 0.5)`` cast to bigint with the same IEEE operation order as the
+    SQL formulation, ``mx`` is an exact max (order-free), and ``qn`` the
+    int64 sum of squares. Rows are grouped by width so the arithmetic is
+    one vectorized pass per distinct width."""
     n = len(embs)
     qv_out: list = [None] * n
     qn_out: list = [None] * n
@@ -353,19 +373,22 @@ def _quantize_rows(embs, np=np):
                 qn_out[i] = 0
             continue
         M = np.vstack([arrs[i] for i in idxs])
-        finite = np.isfinite(M).all(axis=1)
         mx = np.max(np.abs(M), axis=1)
         with np.errstate(all="ignore"):
             Q = np.floor(M * 127.0 / mx[:, None] + 0.5)
         Q = np.where(mx[:, None] == 0.0, 0.0, Q)
+        # gate on the GRID, not the input: finite input near DBL_MAX
+        # overflows x·127 to ±inf, and inf.astype(int64) is LONG_MIN,
+        # not the cast's saturation
+        finite = np.isfinite(Q).all(axis=1)
         for r, i in enumerate(idxs):
             if finite[r]:
                 qi = Q[r].astype(np.int64)
                 qv_out[i] = qi.tolist()
                 qn_out[i] = int(np.dot(qi, qi))
             else:
-                # non-finite input: mimic Spark's non-ANSI double→bigint
-                # cast per element (NaN → 0, ±inf saturates)
+                # mimic Spark's non-ANSI double→bigint cast per element
+                # (NaN → 0, ±inf saturates) and its wrapping int64 self-dot
                 qi2 = []
                 for x in Q[r]:
                     if x != x:
@@ -377,74 +400,58 @@ def _quantize_rows(embs, np=np):
                     else:
                         qi2.append(int(x))
                 qv_out[i] = qi2
-                qn_out[i] = sum(q * q for q in qi2)
+                qn = sum(q * q for q in qi2) & ((1 << 64) - 1)
+                qn_out[i] = qn - (1 << 64) if qn > _LONG_MAX else qn
     return qv_out, qn_out
 
 
+def _quantize_batch(embs: pd.Series) -> pd.DataFrame:
+    qv, qn = _quantize_rows(embs.to_numpy())
+    return pd.DataFrame({"qv": qv, "qn": pd.array(qn, dtype="Int64")})
+
+
+# Nondeterministic so Catalyst neither collapses the struct's two field
+# reads into two UDF calls nor pushes a downstream ``qn > 0`` filter
+# below the projection (either plans a second ArrowEvalPython).
+_QUANTIZE = pandas_udf(
+    _quantize_batch,
+    StructType([
+        StructField("qv", ArrayType(LongType())),
+        StructField("qn", LongType()),
+    ]),
+).asNondeterministic()
+
+
 def _with_quantized(
-    vectors: DataFrame, id_col: str, vec_col: str, *extra_cols: str,
-    via: str = "numpy",
+    vectors: DataFrame, id_col: str, vec_col: str, *extra_cols: str
 ) -> DataFrame:
     """(id, vec[, extra...], qv, qn): int8 max-abs quantization
     (`operators/inference.py` grid) + integer self-dot — the shared front
-    of the semantic-dedup family. ``extra_cols`` ride along untouched
-    (e.g. a shard key).
+    of the semantic-dedup family and the streaming near-dup gate.
+    ``extra_cols`` ride along untouched (a shard key, or the gate's
+    watermarked event-time column — a scalar UDF keeps its input
+    attributes, so the watermark tag reaches the stateful operator).
 
-    Two physical paths, bit-identical by construction (pinned by
-    tests/test_semdedup.py::test_numpy_quantizer_equals_jvm):
+    One Arrow-batched scalar ``pandas_udf`` over ``_quantize_rows``:
+    only the vector column crosses to Python, each quantity is computed
+    once, and the opaque node is a pushdown barrier, so no consumer can
+    re-evaluate the quantization (the SQL formulation's higher-order
+    functions are interpreted per row, and Catalyst inlined them into
+    every pushed-down ``qn > 0`` filter). Bit-identical to the SQL
+    formulation, pinned by
+    tests/test_semdedup.py::test_numpy_quantizer_equals_jvm.
 
-    - ``via='numpy'`` (default, OPTIMIZATION r18 — guide §4.2/§4.4): one
-      Arrow-batched ``mapInPandas`` pass. The JVM formulation's
-      higher-order functions are INTERPRETED per row (~0.15 ms/row), and
-      worse, Catalyst pushes every downstream ``qn > 0`` filter below the
-      projection by INLINING the whole quantization chain into the scan
-      filter — re-evaluating the max-abs fold 3× and the qv/qn folds once
-      more per row (measured: the 8-row semdedup seed collect cost 2.0 s
-      at sf0.1, ~5× the projection itself). The opaque Python node
-      computes each quantity exactly once and is a pushdown barrier, so
-      no consumer can accidentally multiply it. Math is element-wise IEEE
-      on doubles plus exact integer sums — identical numbers.
-    - ``via='jvm'``: the pure-SQL HOF projection. REQUIRED where an
-      opaque node is unusable — the streaming gate keeps it because an
-      event-time watermark tag does not survive a Python node.
-
-    Caveat (numpy path, documented divergence on degenerate data only):
-    a NULL *element* inside an embedding arrives through Arrow as NaN,
-    so such rows quantize like NaN-bearing rows (elements → 0) instead
-    of the JVM's NULL-poisoned qn; NULL/empty ARRAYS and all-finite rows
-    — everything the fixtures and oracles exercise — agree exactly."""
-    df = vectors.select(id_col, vec_col, *extra_cols)
-    if via == "jvm":
-        return (
-            df
-            .withColumn("__sd_mx", F.expr(
-                f"aggregate(transform({vec_col}, x -> abs(cast(x as double))),"
-                " cast(0.0 as double), (a, x) -> greatest(a, x))"))
-            .withColumn("qv", F.expr(
-                f"transform({vec_col}, x -> cast(if(__sd_mx = 0.0d, 0.0d,"
-                f" floor(cast(x as double) * 127.0d / __sd_mx + 0.5d)) as bigint))"))
-            .withColumn("qn", F.expr(
-                "aggregate(transform(qv, x -> x * x),"
-                " cast(0 as bigint), (a, x) -> a + x)"))
-            .drop("__sd_mx")
-        )
-
-    in_cols = df.columns
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", qv array<bigint>, qn bigint"
-
-    def quantize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf[in_cols].copy()
-            qv, qn = _quantize_rows(pdf[vec_col].to_numpy())
-            pdf["qv"] = qv
-            pdf["qn"] = pd.array(qn, dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(quantize, out_schema)
+    Caveat (documented divergence on degenerate data only): a NULL
+    *element* inside an embedding arrives through Arrow as NaN, so such
+    rows quantize like NaN-bearing rows (elements → 0) instead of the
+    SQL formulation's NULL-poisoned qn; NULL/empty ARRAYS and all-finite
+    rows — everything the fixtures and oracles exercise — agree exactly.
+    Under ANSI the SQL cast raises on overflowing elements where this
+    path saturates."""
+    cols = [id_col, vec_col, *extra_cols]
+    return vectors.select(*cols, _QUANTIZE(vec_col).alias("__q")).select(
+        *cols, "__q.qv", "__q.qn"
+    )
 
 
 def quantized_neardup_pairs(
@@ -531,72 +538,35 @@ def quantized_neardup_pairs(
 
 
 
-def _codebook_argmax_expr(cents: list[tuple[int, list[int], int]]) -> F.Column:
-    """argmax over a LITERAL codebook: (cosine DESC, cent_id ASC) via
-    array_max on (s, -cent_id) structs — one projection, no shuffle.
-    Expects (id, qv, qn) columns in scope (``_with_quantized`` output)."""
-    lit_cents = ", ".join(
-        f"struct(cast({cid} as bigint) as cent_id,"
-        f" array({', '.join(str(int(x)) + 'L' for x in cqv)}) as cqv,"
-        f" cast({int(cqn)} as bigint) as cqn)"
-        for cid, cqv, cqn in cents
-    )
-    return F.expr(
-        f"array_max(transform(array({lit_cents}), c -> struct("
-        "cast(aggregate(zip_with(qv, c.cqv, (x, y) -> x * y),"
-        " cast(0 as bigint), (a, x) -> a + x) as double)"
-        " / sqrt(cast(qn * c.cqn as double)) as s,"
-        " -c.cent_id as nc)))"
-    )
-
-
-#: Codebook size above which cell assignment switches from the literal
-#: array-of-structs projection to the broadcast-numpy scorer. The literal
-#: expression embeds K·dims integer literals into the plan — fine for tens
-#: of centroids, quadratic trouble for Catalyst (analysis + codegen) past
-#: a few hundred. The numpy path closes auto-K's former scale hole: the
-#: codebook rides to executors as a closure capture (K·dims int64 ≈ 0.5 MB
-#: per 1k centroids at 64 dims) and each Arrow batch scores via one exact
-#: int64 matmul.
-LITERAL_CODEBOOK_MAX = 64
-
-
 def _assign_cells(
-    df: DataFrame, cents: list[tuple[int, list[int], int]], dims: int,
-    via: str = "auto",
+    df: DataFrame, cents_by_shard: dict, shard_col: str | None = None
 ) -> DataFrame:
-    """Add the ``cell`` column: argmax_c cosine(qv, c) with (s DESC,
-    cent_id ASC) tie-break, over a ``_with_quantized`` frame.
+    """Add the ``cell`` column over a ``_with_quantized`` frame: argmax_c
+    cosine(qv, c) with (s DESC, cent_id ASC) tie-break, each row scored
+    against ITS shard's codebook. ``cents_by_shard`` maps shard key →
+    [(cent_id, qv, qn)]; an unsharded caller passes ``{None: cents}``
+    and no ``shard_col``.
 
-    Two physical paths, BIT-IDENTICAL by construction (pinned by
-    tests/test_semdedup.py::test_numpy_assignment_equals_literal): the
-    dot is exact int64 in both (JVM ``zip_with``/``aggregate`` vs numpy
-    matmul — integer math, no accumulation-order concern), the cast to
-    double is exact, sqrt/divide are IEEE on identical inputs, so equal
-    scores are EXACTLY equal and the tie-break is the same lowest
-    cent_id (cents sorted ascending; ``np.argmax`` returns the first
-    maximum). ``via='literal'`` is a pure projection (zero shuffle,
-    whole-stage codegen); ``via='numpy'`` is a ``mapInPandas`` projection
-    (zero shuffle, Arrow-batched) whose plan cost is independent of K —
-    the 100 TB path for trained codebooks past ``LITERAL_CODEBOOK_MAX``.
+    One ``mapInPandas`` projection (zero shuffle, Arrow-batched) whose
+    plan is independent of K and of the codebook VALUES — a codebook
+    embedded as literals would force a fresh Janino compile per Lloyd
+    round. The codebook rides to executors as a closure capture (K·dims
+    int64 ≈ 0.5 MB per 1k centroids at 64 dims). The dot is an exact
+    int64 matmul, the cast to double is exact, sqrt/divide are IEEE on
+    identical inputs, so equal scores are EXACTLY equal and the
+    tie-break is the lowest cent_id (cents sorted ascending;
+    ``np.argmax`` returns the first maximum) — bit-identical to the SQL
+    literal argmax pinned by
+    tests/test_semdedup.py::test_numpy_assignment_equals_literal.
     """
-    if via == "auto":
-        # OPTIMIZATION r18: numpy for every codebook size. The literal
-        # projection embeds the codebook VALUES into the generated code,
-        # so each Lloyd round's new centroids force a fresh Janino
-        # compile (measured: 2.34 s first-run vs 0.95 via numpy at K=8,
-        # sf0.1; hot runs 0.79 vs 0.66) — the numpy scorer's plan is
-        # value-independent. Bit-identical by the pinned equality test;
-        # 'literal' remains for explicit use/tests.
-        via = "numpy"
-    if via == "literal":
-        a = _codebook_argmax_expr(cents)
-        return df.withColumn("cell", -a.getField("nc"))
-
-    cents = sorted(cents, key=lambda c: c[0])
-    cent_ids = np.array([c[0] for c in cents], dtype=np.int64)
-    C = np.vstack([np.array(c[1], dtype=np.int64) for c in cents])
-    cqn = np.array([c[2] for c in cents], dtype=np.int64)
+    cb = {}
+    for s, cents in cents_by_shard.items():
+        cents = sorted(cents, key=lambda c: c[0])
+        cb[s] = (
+            np.array([c[0] for c in cents], dtype=np.int64),
+            np.vstack([np.array(c[1], dtype=np.int64) for c in cents]),
+            np.array([c[2] for c in cents], dtype=np.int64),
+        )
     in_cols = df.columns
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -605,7 +575,8 @@ def _assign_cells(
     # bound the m×K score matrix per matmul (~32 MB of float64) so huge
     # codebooks don't blow task memory — chunking rows keeps the matmul
     # fully vectorized over K, which is the expensive axis
-    rows_per_chunk = max(1, 4_000_000 // max(1, len(cent_ids)))
+    k_max = max(len(ids) for ids, _, _ in cb.values())
+    rows_per_chunk = max(1, 4_000_000 // k_max)
 
     def score(batches):
         for pdf in batches:
@@ -613,14 +584,22 @@ def _assign_cells(
                 continue
             pdf = pdf[in_cols].reset_index(drop=True)
             cells = np.empty(len(pdf), dtype=np.int64)
-            for lo in range(0, len(pdf), rows_per_chunk):
-                chunk = pdf.iloc[lo : lo + rows_per_chunk]
-                M = np.vstack(chunk["qv"].to_numpy()).astype(np.int64)
-                qn = chunk["qn"].to_numpy(dtype=np.int64)
-                s = (M @ C.T).astype(np.float64) / np.sqrt(
-                    np.outer(qn, cqn).astype(np.float64)
-                )
-                cells[lo : lo + len(chunk)] = cent_ids[np.argmax(s, axis=1)]
+            groups = (
+                pdf.groupby(shard_col).indices.items()
+                if shard_col
+                else [(None, np.arange(len(pdf)))]
+            )
+            for s, idx in groups:
+                cent_ids, C, cqn = cb[s]
+                for lo in range(0, len(idx), rows_per_chunk):
+                    rows = idx[lo : lo + rows_per_chunk]
+                    chunk = pdf.iloc[rows]
+                    M = np.vstack(chunk["qv"].to_numpy()).astype(np.int64)
+                    qn = chunk["qn"].to_numpy(dtype=np.int64)
+                    sc = (M @ C.T).astype(np.float64) / np.sqrt(
+                        np.outer(qn, cqn).astype(np.float64)
+                    )
+                    cells[rows] = cent_ids[np.argmax(sc, axis=1)]
             pdf = pdf.copy()
             pdf["cell"] = cells
             yield pdf
@@ -660,29 +639,33 @@ def _seed_codebook(
 
 def _lloyd_rounds(
     usable: DataFrame,
-    cents: list[tuple[int, list[int], int]],
+    cents_by_shard: dict,
     dims: int,
     train_iters: int,
-) -> list[tuple[int, list[int], int]]:
-    """``train_iters`` Lloyd rounds on the quantized grid: assign by the
-    current literal codebook (projection, no shuffle), per-cell
-    elementwise BIGINT sums (ONE K-group shuffle), new centroid = the
-    ROUNDED INTEGER mean ``floor(sum/n + 0.5)`` per dimension —
-    computed as the EXACT integer floor division ``(2·s + n) fld (2·n)``
-    (mathematically identical: (2s+n)/(2n) = s/n + 1/2 in the rationals,
-    and Python's ``//`` floors), so the trained codebook is
-    bit-reproducible and oracle-portable UNCONDITIONALLY — no 2⁵³
-    float-precision ceiling on the per-cell sum (VERDICT r10 watchlist
-    #1; the earlier ``math.floor(s/n + 0.5)`` was exact only while
-    |s| < 2⁵³ ≈ 7×10¹³ rows per cell at int8 quantization). Python ints
-    are arbitrary precision; the Spark-side BIGINT sum itself is the
+    shard_col: str | None = None,
+) -> dict:
+    """``train_iters`` Lloyd rounds on the quantized grid, per shard
+    (``_assign_cells``'s codebook keying; unsharded = one shard ``None``):
+    assign by the current codebooks (projection, no shuffle), per-(shard,
+    cell) elementwise BIGINT sums (ONE grouped shuffle, ≤ n_shards·K rows
+    collected), new centroid = the ROUNDED INTEGER mean ``floor(sum/n +
+    0.5)`` per dimension — computed as the EXACT integer floor division
+    ``(2·s + n) fld (2·n)`` (mathematically identical: (2s+n)/(2n) = s/n
+    + 1/2 in the rationals, and Python's ``//`` floors), so the trained
+    codebook is bit-reproducible and oracle-portable UNCONDITIONALLY — no
+    2⁵³ float-precision ceiling on the per-cell sum (VERDICT r10
+    watchlist #1; the earlier ``math.floor(s/n + 0.5)`` was exact only
+    while |s| < 2⁵³ ≈ 7×10¹³ rows per cell at int8 quantization). Python
+    ints are arbitrary precision; the Spark-side BIGINT sum itself is the
     only overflow surface and |s| ≤ 127·n keeps it exact to n < 7×10¹⁶.
     A cell that empties, or whose mean rounds to the zero vector, keeps
-    its previous centroid."""
+    its previous centroid — shard by shard, so training a shard equals
+    training ``semdedup`` on that shard alone."""
+    keys = [shard_col] if shard_col else []
     for _ in range(train_iters):
         sums = (
-            _assign_cells(usable, cents, dims)
-            .groupBy("cell")
+            _assign_cells(usable, cents_by_shard, shard_col)
+            .groupBy(*keys, "cell")
             .agg(
                 F.count(F.lit(1)).alias("__n"),
                 *[
@@ -690,7 +673,7 @@ def _lloyd_rounds(
                     for d in range(dims)
                 ],
             )
-            .collect()  # bounded: ≤ k_cells rows — one row per cell
+            .collect()  # bounded: ≤ n_shards·k_cells rows — one per cell
         )
         updated = {}
         for r in sums:
@@ -698,12 +681,64 @@ def _lloyd_rounds(
             nqv = [(2 * int(r[f"__s{d}"]) + n) // (2 * n) for d in range(dims)]
             nqn = sum(x * x for x in nqv)
             if nqn > 0:
-                updated[int(r["cell"])] = (nqv, nqn)
-        cents = [
-            (cid, *updated[cid]) if cid in updated else (cid, cqv, cqn)
-            for cid, cqv, cqn in cents
-        ]
-    return cents
+                s = r[shard_col] if shard_col else None
+                updated[(s, int(r["cell"]))] = (nqv, nqn)
+        cents_by_shard = {
+            s: [
+                (cid, *updated[(s, cid)])
+                if (s, cid) in updated
+                else (cid, cqv, cqn)
+                for cid, cqv, cqn in cents
+            ]
+            for s, cents in cents_by_shard.items()
+        }
+    return cents_by_shard
+
+
+def _dedup_cells(
+    assigned: DataFrame, id_col: str, tau: float, shard_col: str | None = None
+) -> DataFrame:
+    """The per-cell dedup kernel of ``semdedup`` and ``semdedup_sharded``:
+    one shuffle groups an ``_assign_cells`` frame by (shard,) cell; each
+    group's pair matrix is scored INSIDE numpy (``applyInPandas`` — exact
+    int64 Gram matrix) and only the per-vector verdict comes back. A
+    vector's ``dup_of`` is the LOWEST id that covers it at quantized
+    cosine ≥ tau. Output (id[, shard], cell, dup_of, keep)."""
+    keys = [shard_col, "cell"] if shard_col else ["cell"]
+    shard_field = (
+        f"shard {assigned.schema[shard_col].dataType.simpleString()}, "
+        if shard_col
+        else ""
+    )
+
+    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
+        qn = pdf["qn"].to_numpy(dtype=np.int64)
+        # exact int64 Gram matrix; cast + sqrt + divide identical to the
+        # JVM/DuckDB expression on the same integers
+        cos = (M @ M.T).astype(np.float64) / np.sqrt(
+            np.outer(qn, qn).astype(np.float64)
+        )
+        covered = np.triu(cos >= tau, k=1)  # row i covers column j, i < j
+        has_dup = covered.any(axis=0)
+        first = covered.argmax(axis=0)  # ids sorted asc → argmax = min id
+        out = {id_col: ids}
+        if shard_col:
+            out["shard"] = pdf[shard_col].to_numpy()
+        out["cell"] = pdf["cell"].to_numpy(dtype=np.int64)
+        out["dup_of"] = pd.array(
+            [ids[first[j]] if has_dup[j] else None for j in range(len(ids))],
+            dtype="Int64",
+        )
+        out["keep"] = (~has_dup).astype(np.int32)
+        return pd.DataFrame(out)
+
+    return assigned.groupBy(*keys).applyInPandas(
+        dedup_cell,
+        f"{id_col} long, {shard_field}cell long, dup_of long, keep int",
+    )
 
 
 #: Auto-K policy constants (VERDICT r10 #4 — MEASURED, see BASELINE.md
@@ -712,10 +747,8 @@ def _lloyd_rounds(
 #: (~16 bytes/pair), so avg cell 1024 → ~16 MB per cell task at the
 #: measured ~1.1× fixture skew, comfortably inside an executor core's
 #: budget with ~4× headroom for skewier corpora. k_max bounds the
-#: CODEBOOK, not the expression — past LITERAL_CODEBOOK_MAX the
-#: assignment runs the broadcast-numpy scorer (plan cost independent of
-#: K), so the binding constraints are the codebook's closure-capture
-#: size (K·dims int64 ≈ 34 MB per task at the clamp, 64 dims) and the
+#: CODEBOOK: the numpy scorer's plan cost is independent of K, so the
+#: binding constraints are the codebook's closure-capture size (K·dims int64 ≈ 34 MB per task at the clamp, 64 dims) and the
 #: K-row Lloyd aggregate. Past the clamp (N > 64 M rows/pass at
 #: target 1024) shard the corpus on a coarse key (language/domain/
 #: bucket) and semdedup each shard — the warning says so loudly.
@@ -784,13 +817,13 @@ def semdedup(
        toward genuine k-means centroids). The codebook is a bounded
        driver-side collect (K rows); assignment is a pure projection over
        the scan — ZERO corpus shuffle, no N×K intermediate, no window —
-       via a LITERAL array-of-struct expression for small K, or the
-       bit-identical broadcast-numpy ``mapInPandas`` scorer past
-       ``LITERAL_CODEBOOK_MAX`` (see ``_assign_cells``). At 100 TB this
-       is the codebook-broadcast pattern every IVF/k-means scorer uses.
-    3. **Per-cell pairs only, never as Spark rows**: one shuffle groups
-       vectors by ``cell``; each cell's pair matrix is scored INSIDE numpy
-       (``applyInPandas`` — int64 matmul, exact) and only the per-vector
+       via the broadcast-numpy ``mapInPandas`` scorer (see
+       ``_assign_cells``). At 100 TB this is the codebook-broadcast
+       pattern every IVF/k-means scorer uses.
+    3. **Per-cell pairs only, never as Spark rows** (``_dedup_cells``):
+       one shuffle groups vectors by ``cell``; each cell's pair matrix is
+       scored INSIDE numpy (``applyInPandas`` — int64 matmul, exact) and
+       only the per-vector
        verdict comes back. A vector's ``dup_of`` is the LOWEST id that
        covers it at quantized cosine ≥ tau (drop-if-any-earlier-neighbor —
        the same greedy representative rule as ``dedup_cleaned_corpus``).
@@ -807,7 +840,7 @@ def semdedup(
     grid before the final assignment (VERDICT r9 #2: id-seeded cells
     measured recall 0.285 at sf0.1/K=8/τ=0.4 — trained centroids lift
     it; see BASELINE.md round-10 notes for the measured numbers). Each
-    round: assign by the current literal codebook (projection, no
+    round: assign by the current codebook (projection, no
     shuffle), per-cell elementwise BIGINT sums (ONE K-group shuffle),
     then the new centroid is the ROUNDED INTEGER mean
     ``floor(sum/n + 0.5)`` per dimension — computed as the exact integer
@@ -851,40 +884,9 @@ def semdedup(
         # scoped release, not a global clearCache)
         usable = track_persist(usable)
 
-    cents = _lloyd_rounds(usable, cents, dims, train_iters)
-    assigned = _assign_cells(usable, cents, dims).select(
-        id_col, "qv", "qn", "cell"
-    )
+    cb = _lloyd_rounds(usable, {None: cents}, dims, train_iters)
+    return _dedup_cells(_assign_cells(usable, cb), id_col, tau)
 
-    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-        qn = pdf["qn"].to_numpy(dtype=np.int64)
-        # exact int64 Gram matrix; cast + sqrt + divide identical to the
-        # JVM/DuckDB expression on the same integers
-        cos = (M @ M.T).astype(np.float64) / np.sqrt(
-            np.outer(qn, qn).astype(np.float64)
-        )
-        covered = np.triu(cos >= tau, k=1)  # row i covers column j, i < j
-        has_dup = covered.any(axis=0)
-        first = covered.argmax(axis=0)  # ids sorted asc → argmax = min id
-        dup_of = pd.array(
-            [ids[first[j]] if has_dup[j] else None for j in range(len(ids))],
-            dtype="Int64",
-        )
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                "cell": pdf["cell"].to_numpy(dtype=np.int64),
-                "dup_of": dup_of,
-                "keep": (~has_dup).astype(np.int32),
-            }
-        )
-
-    return assigned.groupBy("cell").applyInPandas(
-        dedup_cell, f"{id_col} long, cell long, dup_of long, keep int"
-    )
 
 
 def semdedup_incremental(
@@ -975,7 +977,7 @@ def semdedup_incremental(
     ).select(id_col, "qv", "qn")
     if train_iters > 0:
         usable_b = track_persist(usable_b)
-    cents = _lloyd_rounds(usable_b, cents, dims, train_iters)
+    cb = _lloyd_rounds(usable_b, {None: cents}, dims, train_iters)
 
     qn_ = _with_quantized(new, id_col, vec_col)
     usable_n = qn_.filter(
@@ -986,8 +988,7 @@ def semdedup_incremental(
         usable_b.withColumn("is_new", F.lit(0)).unionByName(
             usable_n.withColumn("is_new", F.lit(1))
         ),
-        cents,
-        dims,
+        cb,
     ).select(id_col, "qv", "qn", "cell", "is_new")
 
     def dedup_cell_incr(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1062,100 +1063,6 @@ def semdedup_incremental(
 SHARDED_SEED_MAX_ROWS = 100_000
 
 
-def _assign_cells_sharded(
-    df: DataFrame, cents_by_shard: dict, shard_col: str
-) -> DataFrame:
-    """Per-shard cell assignment: the broadcast-numpy scorer of
-    ``_assign_cells(via='numpy')`` with one codebook PER SHARD (rows
-    grouped by the shard key inside each Arrow batch, each group scored
-    against its own codebook — same exact int64/IEEE math and
-    (s DESC, cent_id ASC) tie-break, bit-identical to a per-shard
-    literal argmax). Zero corpus shuffle."""
-    cb = {
-        s: (
-            np.array([c[0] for c in cents], dtype=np.int64),
-            np.vstack([np.array(c[1], dtype=np.int64) for c in cents]),
-            np.array([c[2] for c in cents], dtype=np.int64),
-        )
-        for s, cents in cents_by_shard.items()
-    }
-    in_cols = df.columns
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", cell long"
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf[in_cols].reset_index(drop=True)
-            cells = np.empty(len(pdf), dtype=np.int64)
-            for s, idx in pdf.groupby(shard_col).groups.items():
-                cent_ids, C, cqn = cb[s]
-                sub = pdf.loc[idx]
-                M = np.vstack(sub["qv"].to_numpy()).astype(np.int64)
-                qn = sub["qn"].to_numpy(dtype=np.int64)
-                sc = (M @ C.T).astype(np.float64) / np.sqrt(
-                    np.outer(qn, cqn).astype(np.float64)
-                )
-                cells[np.asarray(idx, dtype=np.int64)] = cent_ids[
-                    np.argmax(sc, axis=1)
-                ]
-            pdf = pdf.copy()
-            pdf["cell"] = cells
-            yield pdf
-
-    return df.mapInPandas(assign, out_schema)
-
-
-def _lloyd_rounds_sharded(
-    usable: DataFrame,
-    cents_by_shard: dict,
-    dims: int,
-    train_iters: int,
-    shard_col: str,
-    id_col: str,
-) -> dict:
-    """Per-shard Lloyd rounds — the one-shot ``_lloyd_rounds`` with the
-    shard key added to the aggregate: assign by the current per-shard
-    codebooks (projection), per-(shard, cell) elementwise BIGINT sums
-    (ONE grouped shuffle, ≤ n_shards·K rows collected), new centroid =
-    the exact integer floor division ``(2·s + n) fld (2·n)`` per
-    dimension. A cell that empties or rounds to zero keeps its previous
-    centroid — shard by shard, exactly the one-shot rule, so training a
-    shard here equals training ``semdedup`` on that shard alone."""
-    for _ in range(train_iters):
-        sums = (
-            _assign_cells_sharded(usable, cents_by_shard, shard_col)
-            .groupBy(shard_col, "cell")
-            .agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[
-                    F.sum(F.element_at("qv", d + 1)).alias(f"__s{d}")
-                    for d in range(dims)
-                ],
-            )
-            .collect()  # bounded: ≤ n_shards·k_cells rows
-        )
-        updated: dict = {}
-        for r in sums:
-            n = int(r["__n"])
-            nqv = [(2 * int(r[f"__s{d}"]) + n) // (2 * n) for d in range(dims)]
-            nqn = sum(x * x for x in nqv)
-            if nqn > 0:
-                updated[(r[shard_col], int(r["cell"]))] = (nqv, nqn)
-        cents_by_shard = {
-            s: [
-                (cid, *updated[(s, cid)])
-                if (s, cid) in updated
-                else (cid, cqv, cqn)
-                for cid, cqv, cqn in cents
-            ]
-            for s, cents in cents_by_shard.items()
-        }
-    return cents_by_shard
-
-
 def semdedup_sharded(
     vectors: DataFrame,
     shard_col: str = "label",
@@ -1176,11 +1083,10 @@ def semdedup_sharded(
     bounding EVERYTHING per shard — each shard gets its own K-lowest-id
     codebook (seeded via one windowed rank, collected bounded at
     n_shards·k_cells rows and guarded by ``SHARDED_SEED_MAX_ROWS``), the
-    assignment is one broadcast-numpy ``mapInPandas`` projection scoring
-    each row against ITS shard's codebook (zero corpus shuffle, same
-    exact int64/IEEE math as ``_assign_cells`` — bit-identical to a
-    per-shard literal argmax), and the pair kernel groups by
-    (shard, cell) so the Σ|cell|² work is per-shard. A duplicate pair
+    assignment is ``semdedup``'s ``_assign_cells`` projection scoring
+    each row against ITS shard's codebook (zero corpus shuffle), and
+    ``semdedup``'s per-cell kernel groups by (shard, cell) so the
+    Σ|cell|² work is per-shard. A duplicate pair
     SPLIT ACROSS SHARDS is deliberately not detected — that is the
     shard contract, identical to running ``semdedup`` per language.
     Ids must be unique within a shard; the guard enforces this for the
@@ -1194,8 +1100,8 @@ def semdedup_sharded(
     NULL shard keys are excluded with the same loudness as unusable
     vectors (documented, mirrored in the oracle's inner join + IS NOT
     NULL). ``train_iters`` runs per-shard Lloyd rounds
-    (``_lloyd_rounds_sharded`` — the one-shot trainer with the shard key
-    in the aggregate, exact integer means); training a shard here equals
+    (``_lloyd_rounds`` with the shard key in the aggregate, exact
+    integer means); training a shard here equals
     training ``semdedup`` on that shard alone, pinned by the composition
     test. The staged registry entry keeps train_iters=0 (its oracle pins
     the id-seeded codebook); the dedup verdict rule, quantization grid,
@@ -1292,38 +1198,10 @@ def semdedup_sharded(
 
     if train_iters > 0:
         usable = track_persist(usable)
-        cents_by_shard = _lloyd_rounds_sharded(
-            usable, cents_by_shard, dims, train_iters, shard_col, id_col
-        )
-    assigned = _assign_cells_sharded(usable, cents_by_shard, shard_col)
-    shard_t = usable.schema[shard_col].dataType.simpleString()
-
-    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-        qn = pdf["qn"].to_numpy(dtype=np.int64)
-        cos = (M @ M.T).astype(np.float64) / np.sqrt(
-            np.outer(qn, qn).astype(np.float64)
-        )
-        covered = np.triu(cos >= tau, k=1)
-        has_dup = covered.any(axis=0)
-        first = covered.argmax(axis=0)
-        dup_of = pd.array(
-            [ids[first[j]] if has_dup[j] else None for j in range(len(ids))],
-            dtype="Int64",
-        )
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                "shard": pdf[shard_col].to_numpy(),
-                "cell": pdf["cell"].to_numpy(dtype=np.int64),
-                "dup_of": dup_of,
-                "keep": (~has_dup).astype(np.int32),
-            }
-        )
-
-    return assigned.groupBy(shard_col, "cell").applyInPandas(
-        dedup_cell,
-        f"{id_col} long, shard {shard_t}, cell long, dup_of long, keep int",
+    cents_by_shard = _lloyd_rounds(
+        usable, cents_by_shard, dims, train_iters, shard_col
+    )
+    return _dedup_cells(
+        _assign_cells(usable, cents_by_shard, shard_col), id_col, tau,
+        shard_col,
     )

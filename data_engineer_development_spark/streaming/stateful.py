@@ -591,9 +591,10 @@ def stream_neardup_gate(
         # event-time column); EventTimeTimeout without a watermark is a
         # query-start error, so failure is loud, not silent
         vectors = vectors.withWatermark(event_time_col, watermark_delay)
-        q = _with_quantized(
-            vectors, id_col, vec_col, event_time_col, via="jvm"
-        )  # jvm: a watermark tag cannot survive an opaque Python node
+        # the event-time column rides through the quantizer's projection
+        # with its watermark tag intact (a scalar UDF keeps its input
+        # attributes)
+        q = _with_quantized(vectors, id_col, vec_col, event_time_col)
         usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0))
         if tables == 1:
             bucketed = bucket_assign(
@@ -653,7 +654,7 @@ def stream_neardup_gate(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
 
-    q = _with_quantized(vectors, id_col, vec_col, via="jvm")
+    q = _with_quantized(vectors, id_col, vec_col)
     usable = q.filter((F.size(vec_col) == dims) & (F.col("qn") > 0))
     timeout = (
         GroupStateTimeout.NoTimeout

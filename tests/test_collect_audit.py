@@ -33,21 +33,19 @@ _ALLOWED = {
                             "trainer), the same bounded control-plane "
                             "shape as Lloyd's centroid collect"),
     "catalog.py": (1, "SHOW TBLPROPERTIES — metadata rows, never data"),
-    "operators/similarity.py": (8, "documented bounded brute-force path "
+    "operators/similarity.py": (7, "documented bounded brute-force path "
                                    "behind the LSH auto-switch cap; semdedup "
                                    "codebook seed collect (≤ k_cells rows, "
-                                   "folded into a literal assignment "
-                                   "expression); Lloyd per-round centroid "
-                                   "sums collect (≤ k_cells rows — one per "
-                                   "cell, the distributed-k-means driver "
-                                   "round-trip); quantized truth-set matrix "
-                                   "collect (ceiling-guarded exactness "
-                                   "baseline); sharded dims probe (limit-1), "
-                                   "per-shard seed collect (≤ n_shards·"
-                                   "k_cells rows, SHARDED_SEED_MAX_ROWS "
-                                   "guarded), the sharded Lloyd "
-                                   "per-round sums collect (≤ n_shards·"
-                                   "k_cells rows — one per (shard, cell)), "
+                                   "captured by the numpy cell scorer); "
+                                   "Lloyd per-round centroid sums collect "
+                                   "(≤ n_shards·k_cells rows — one per "
+                                   "(shard, cell), the distributed-k-means "
+                                   "driver round-trip); quantized truth-set "
+                                   "matrix collect (ceiling-guarded "
+                                   "exactness baseline); sharded dims probe "
+                                   "(limit-1), per-shard seed collect (≤ "
+                                   "n_shards·k_cells rows, "
+                                   "SHARDED_SEED_MAX_ROWS guarded), "
                                    "and semdedup_incremental's OPT-IN "
                                    "strict-mode overlap probe (limit-10 "
                                    "semi-join, off the default hot path)"),

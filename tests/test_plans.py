@@ -571,7 +571,8 @@ def test_unpartitioned_window_detector_sees_function_call_orderings():
 
 #: entries whose plan INTENTIONALLY runs an Arrow-vectorized Python kernel
 #: — the engine's ONLY Python execution (media codecs over opaque binary;
-#: the sequential-fold cosine whose IEEE order must match the oracle).
+#: the sequential-fold cosine whose IEEE order must match the oracle; the
+#: semdedup family's int8 quantizer, one ArrowEvalPython per quantization).
 #: Everything else must stay JVM-side; row-at-a-time Python
 #: (BatchEvalPython) is banned everywhere, whitelist or not.
 _ARROW_KERNEL_OK = {

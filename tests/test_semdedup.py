@@ -10,9 +10,49 @@ from data_engineer_development_spark.operators.similarity import semdedup
 from data_engineer_development_spark.queries.similarity import q_semantic_dedup
 
 
+def _jvm_quantized(df, id_col: str, vec_col: str):
+    """Reference quantizer: the SQL higher-order-function formulation of
+    the int8 max-abs grid. ``_with_quantized`` must match it bit for bit
+    (NULL array → NULL qv/qn; the bigint cast saturates and the self-dot
+    wraps with ANSI off)."""
+    return (
+        df.select(id_col, vec_col)
+        .withColumn("__sd_mx", F.expr(
+            f"aggregate(transform({vec_col}, x -> abs(cast(x as double))),"
+            " cast(0.0 as double), (a, x) -> greatest(a, x))"))
+        .withColumn("qv", F.expr(
+            f"transform({vec_col}, x -> cast(if(__sd_mx = 0.0d, 0.0d,"
+            " floor(cast(x as double) * 127.0d / __sd_mx + 0.5d)) as bigint))"))
+        .withColumn("qn", F.expr(
+            "aggregate(transform(qv, x -> x * x),"
+            " cast(0 as bigint), (a, x) -> a + x)"))
+        .drop("__sd_mx")
+    )
+
+
+def _literal_assign_cells(df, cents):
+    """Reference cell scorer: argmax over a LITERAL codebook, (cosine
+    DESC, cent_id ASC) via array_max on (s, -cent_id) structs, over a
+    frame with (qv, qn) columns. ``_assign_cells`` must match it."""
+    lit_cents = ", ".join(
+        f"struct(cast({cid} as bigint) as cent_id,"
+        f" array({', '.join(str(int(x)) + 'L' for x in cqv)}) as cqv,"
+        f" cast({int(cqn)} as bigint) as cqn)"
+        for cid, cqv, cqn in cents
+    )
+    best = F.expr(
+        f"array_max(transform(array({lit_cents}), c -> struct("
+        "cast(aggregate(zip_with(qv, c.cqv, (x, y) -> x * y),"
+        " cast(0 as bigint), (a, x) -> a + x) as double)"
+        " / sqrt(cast(qn * c.cqn as double)) as s,"
+        " -c.cent_id as nc)))"
+    )
+    return df.withColumn("cell", -best.getField("nc"))
+
+
 def test_plan_is_cellwise_never_corpus_squared(spark):
     """The 100 TB contract: codebook assignment is a pure projection (the
-    literal-array argmax — no exchange between the scan and the pair
+    numpy scorer — no exchange between the scan and the pair
     join), and candidate pairs come from an equi-join on the cell key —
     no cartesian, no nested-loop, no corpus×corpus."""
     plan = (
@@ -536,12 +576,13 @@ def test_auto_k_matches_oracle_constant_at_fixture_scale():
 
 
 def test_numpy_assignment_equals_literal(spark):
-    """The broadcast-numpy cell scorer (the K > LITERAL_CODEBOOK_MAX
-    path that closes auto-K's scale hole) must be BIT-IDENTICAL to the
-    literal array-of-structs projection: exact int64 dots in both, exact
+    """The numpy cell scorer must be BIT-IDENTICAL to the literal
+    array-of-structs argmax reference: exact int64 dots in both, exact
     cast to double, IEEE sqrt/divide, and the same (s DESC, cent_id ASC)
     tie-break (cents ascending + np.argmax first-max). Checked on the
-    fixture with both a raw seed and a Lloyd-trained codebook."""
+    fixture with a raw seed and a Lloyd-trained codebook, unsharded (one
+    shard, key None) and with three shards, each scored against its own
+    codebook."""
     from data_engineer_development_spark.operators.similarity import (
         _assign_cells,
         _lloyd_rounds,
@@ -553,52 +594,40 @@ def test_numpy_assignment_equals_literal(spark):
     vecs = load_table(spark, SF_CORRECT, "embeddings")
     q = _with_quantized(vecs, "vec_id", "embedding")
     cents, dims = _seed_codebook(q, 8, 64, "vec_id")
-    usable = q.filter(
-        (F.size("embedding") == dims) & (F.col("qn") > 0)
-    ).select("vec_id", "qv", "qn")
+    usable = (
+        q.filter((F.size("embedding") == dims) & (F.col("qn") > 0))
+        .select("vec_id", "qv", "qn")
+        .withColumn("shard", (F.col("vec_id") % 3).cast("int"))
+    )
+    by_shard: dict = {}
+    for r in usable.orderBy("vec_id").collect():
+        if len(by_shard.setdefault(r["shard"], [])) < 8:
+            by_shard[r["shard"]].append(
+                (r["vec_id"], list(r["qv"]), r["qn"])
+            )
+    assert len(by_shard) == 3
 
-    for cb in (cents, _lloyd_rounds(usable, cents, dims, 2)):
-        lit = {
-            r["vec_id"]: r["cell"]
-            for r in _assign_cells(usable, cb, dims, via="literal").collect()
-        }
-        npy = {
-            r["vec_id"]: r["cell"]
-            for r in _assign_cells(usable, cb, dims, via="numpy").collect()
-        }
-        assert lit == npy
+    def cells(df):
+        return {r["vec_id"]: r["cell"] for r in df.collect()}
 
-    # scale path stays a projection: no exchange between scan and scorer
+    for cb, shard_col in (({None: cents}, None), (by_shard, "shard")):
+        for trained in (cb, _lloyd_rounds(usable, cb, dims, 2, shard_col)):
+            ref: dict = {}
+            for s, cs in trained.items():
+                part = usable if s is None else usable.filter(
+                    F.col("shard") == s
+                )
+                ref.update(cells(_literal_assign_cells(part, cs)))
+            assert cells(_assign_cells(usable, trained, shard_col)) == ref
+
+    # the scorer stays a projection: no exchange between scan and scorer
     plan = (
-        _assign_cells(usable, cents, dims, via="numpy")
+        _assign_cells(usable, by_shard, "shard")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     assert "Exchange" not in plan, plan
-
-
-def test_semdedup_end_to_end_identical_on_numpy_path(spark, monkeypatch):
-    """Forcing every assignment through the numpy scorer (threshold 0)
-    must leave semdedup's full verdict set — training rounds included —
-    unchanged from the literal default."""
-    import data_engineer_development_spark.operators.similarity as S_mod
-
-    from data_engineer_development_spark.sources import load_table
-
-    vecs = load_table(spark, SF_CORRECT, "embeddings")
-
-    def run():
-        return {
-            r["vec_id"]: (r["cell"], r["dup_of"], r["keep"])
-            for r in S_mod.semdedup(
-                vecs, k_cells=8, tau=0.4, dims=64, train_iters=2
-            ).collect()
-        }
-
-    base = run()
-    monkeypatch.setattr(S_mod, "LITERAL_CODEBOOK_MAX", 0)
-    assert run() == base
 
 
 def test_semdedup_sharded_isolates_shards(spark):
@@ -923,12 +952,13 @@ def test_semdedup_sharded_rejects_duplicate_ids_within_shard(spark):
 
 
 def test_numpy_quantizer_equals_jvm(spark):
-    """r18 optimization pin (guide §4.2/§4.4): the Arrow/numpy
-    ``_with_quantized`` path must reproduce the JVM HOF formulation
-    BIT-FOR-BIT — same max-abs grid (element-wise IEEE double ops in the
-    same order), same exact int64 self-dot, same NULL-array/empty-array/
-    zero-norm/off-width handling — on a corpus that exercises every edge
-    the fixtures and oracles can reach."""
+    """The Arrow ``_with_quantized`` quantizer must reproduce the SQL
+    higher-order-function reference BIT-FOR-BIT — same max-abs grid
+    (element-wise IEEE double ops in the same order), same exact int64
+    self-dot, same NULL-array/empty-array/zero-norm/off-width handling —
+    on a corpus that exercises every edge the fixtures and oracles can
+    reach, plus the non-finite and overflowing corner under ANSI off
+    (the bigint cast saturates, the self-dot wraps)."""
     from data_engineer_development_spark.operators.similarity import (
         _with_quantized,
     )
@@ -949,31 +979,191 @@ def test_numpy_quantizer_equals_jvm(spark):
         rows, "vec_id long, embedding array<float>"
     )
 
-    def grab(via):
+    def grab(frame):
         return {
             r["vec_id"]: (
                 None if r["qv"] is None else tuple(r["qv"]),
                 r["qn"],
             )
-            for r in _with_quantized(
-                df, "vec_id", "embedding", via=via
-            ).collect()
+            for r in frame.collect()
         }
 
-    assert grab("numpy") == grab("jvm")
+    assert grab(_with_quantized(df, "vec_id", "embedding")) == grab(
+        _jvm_quantized(df, "vec_id", "embedding")
+    )
 
-    # the fixture corpus end-to-end, both paths, bit-for-bit
+    # finite input whose grid overflows (x·127 → ±inf): qv saturates to
+    # [LONG_MAX, LONG_MIN, 0] and qn wraps to 1, as the SQL cast and
+    # bigint arithmetic do with ANSI off; NaN / inf elements → 0
+    wide = spark.createDataFrame(
+        [
+            (10, [1.7e308, -1.7e308, 1.0]),
+            (11, [float("nan"), 1.0, 2.0]),
+            (12, [float("inf"), 1.0, -2.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        ref = grab(_jvm_quantized(wide, "vec_id", "embedding"))
+        got = grab(_with_quantized(wide, "vec_id", "embedding"))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert ref[10] == (((1 << 63) - 1, -(1 << 63), 0), 1)
+    assert got == ref
+
+    # the fixture corpus end-to-end, bit-for-bit
     from data_engineer_development_spark.sources import load_table
 
     vecs = load_table(spark, SF_CORRECT, "embeddings")
-    a = {
-        r["vec_id"]: (tuple(r["qv"]), r["qn"])
-        for r in _with_quantized(vecs, "vec_id", "embedding").collect()
+    assert grab(_with_quantized(vecs, "vec_id", "embedding")) == grab(
+        _jvm_quantized(vecs, "vec_id", "embedding")
+    )
+
+
+def _gate_stream(spark, tmp_path, name, rows, with_ts=False):
+    """A one-file parquet stream of (vec_id, embedding[, ts]) rows."""
+    import pandas as pd
+
+    cols = {
+        "vec_id": [r[0] for r in rows],
+        "embedding": [r[1] for r in rows],
     }
-    b = {
-        r["vec_id"]: (tuple(r["qv"]), r["qn"])
-        for r in _with_quantized(
-            vecs, "vec_id", "embedding", via="jvm"
-        ).collect()
+    if with_ts:
+        t0 = pd.Timestamp("2026-01-01 00:00:00")
+        cols["ts"] = [t0 + pd.Timedelta(seconds=r[0]) for r in rows]
+    src = str(tmp_path / name)
+    spark.createDataFrame(pd.DataFrame(cols)).coalesce(1).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    return spark.readStream.format("parquet").schema(schema).load(src)
+
+
+def test_null_element_quantizes_as_zero_in_semdedup_and_gate(
+    spark, tmp_path
+):
+    """A NULL element inside an embedding reaches the quantizer through
+    Arrow as NaN, so the row quantizes like a NaN-bearing row: the max
+    is NaN and every element → 0, qn 0. Batch semdedup and the streaming
+    gate both drop it at ``qn > 0`` (the gate used to quantize in SQL,
+    where the NULL poisoned qn to NULL — dropped by the same filter).
+    Its would-be duplicate [2, 0, 0, 0] therefore keeps."""
+    from data_engineer_development_spark.operators.similarity import (
+        _with_quantized,
+    )
+    from data_engineer_development_spark.streaming.stateful import (
+        stream_neardup_gate,
+    )
+    from data_engineer_development_spark.streaming.windows import (
+        run_to_memory_sink,
+    )
+
+    rows = [
+        (0, [1.0, None, 0.0, 0.0]),
+        (1, [2.0, 0.0, 0.0, 0.0]),   # a copy of 0 if NULL counted as 0.0
+        (2, [0.0, 1.0, 0.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = {
+        r["vec_id"]: (list(r["qv"]), r["qn"])
+        for r in _with_quantized(df, "vec_id", "embedding").collect()
     }
-    assert a == b
+    assert q[0] == ([0, 0, 0, 0], 0)
+    out = {
+        r["vec_id"]: (r["dup_of"], r["keep"])
+        for r in semdedup(df, k_cells=2, tau=0.9, dims=4).collect()
+    }
+    assert out == {1: (None, 1), 2: (None, 1)}
+
+    stream = _gate_stream(spark, tmp_path, "null_elem", rows)
+    run_to_memory_sink(
+        stream_neardup_gate(stream, tau=0.9, planes=2, dims=4),
+        "t_gate_null_elem", output_mode="update", assert_single_batch=True,
+        state_partitions=2, no_data_batches=False,
+    )
+    got = {
+        r["vec_id"]: (r["dup_of"], r["admitted"])
+        for r in spark.table("t_gate_null_elem").collect()
+    }
+    assert got == {1: (None, 1), 2: (None, 1)}
+
+
+def _arrow_evals(plan: str) -> int:
+    return sum(
+        1 for line in plan.splitlines() if "ArrowEvalPython" in line
+    )
+
+
+def test_quantizer_plans_one_arrow_eval_per_quantization(
+    spark, tmp_path, monkeypatch
+):
+    """Plan shape of the one quantizer: each quantization plans exactly
+    ONE ArrowEvalPython (the UDF is nondeterministic, so neither a
+    pushed-down ``qn > 0`` filter nor the struct's two field reads
+    duplicate it), no plan carries the SQL higher-order-function
+    quantizer, and in the streaming gate's event-TTL branch the
+    watermark-tagged event-time column (``-T<delay>ms``) reaches
+    FlatMapGroupsInPandasWithState through the quantizer's projection."""
+    import re
+
+    from data_engineer_development_spark.sources import load_table
+    from data_engineer_development_spark.streaming.stateful import (
+        stream_neardup_gate,
+    )
+    from data_engineer_development_spark.streaming.windows import (
+        finish_memory_sink,
+        start_to_memory_sink,
+    )
+
+    def physical(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    vecs = load_table(spark, SF_CORRECT, "embeddings")
+    collected: list = []
+    cls = type(vecs)
+    orig_collect = cls.collect
+
+    def recording_collect(self):
+        collected.append(physical(self))
+        return orig_collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    out = semdedup(vecs, k_cells=8, tau=0.4, dims=64)
+    monkeypatch.setattr(cls, "collect", orig_collect)
+    seed_plan = collected[0]  # _seed_codebook's bounded K-row collect
+    assert "TakeOrderedAndProject" in seed_plan, seed_plan
+    usable_plan = physical(out)
+    for plan in (seed_plan, usable_plan):
+        assert _arrow_evals(plan) == 1, plan
+        assert "aggregate(transform(" not in plan, plan
+
+    rows = [(i, [1.0 + i, 0.5, -0.25, 0.0]) for i in range(4)]
+    wm = re.compile(r"__wm_ts#\d+-T1000ms")
+    for name, kwargs in (
+        ("plain", {}),
+        ("event_ttl", {"event_time_col": "ts", "event_ttl_ms": 600_000,
+                       "watermark_delay": "1 second"}),
+        ("event_ttl_banded", {"event_time_col": "ts",
+                              "event_ttl_ms": 600_000,
+                              "watermark_delay": "1 second", "tables": 2}),
+    ):
+        stream = _gate_stream(
+            spark, tmp_path, "plan_" + name, rows, with_ts=True
+        )
+        run = start_to_memory_sink(
+            stream_neardup_gate(stream, tau=0.9, planes=2, dims=4, **kwargs),
+            "t_gate_plan_" + name, output_mode="update", state_partitions=2,
+        )
+        finish_memory_sink(run)
+        plan = (
+            run["query"]._jsq.streamingQuery().lastExecution()
+            .executedPlan().toString()
+        )
+        assert _arrow_evals(plan) == 1, plan
+        assert "aggregate(transform(" not in plan, plan
+        if "event_time_col" in kwargs:
+            stateful = [
+                line for line in plan.splitlines()
+                if "FlatMapGroupsInPandasWithState" in line
+            ]
+            assert len(stateful) == 1 and wm.search(stateful[0]), plan
