@@ -136,3 +136,23 @@ def release_tracked() -> int:
         except Exception:  # noqa: BLE001 — a dead session can't hold cache
             pass
     return n
+
+
+def overlap(fns: list) -> list:
+    """Run independent Spark actions concurrently from a small driver
+    thread pool (optimization guide §2.6: actions are only sequential
+    because driver code calls them sequentially; overlapping independent
+    jobs lets each job's tasks back-fill capacity the others' scheduling
+    gaps and stragglers leave idle). Snapshot commits and the medallion
+    dim writes are dominated by per-job constants, so overlapping N
+    ~equal jobs approaches an N-fold cut of that constant. Results in
+    input order; the first exception propagates after all submitted work
+    settles (a failed sibling never leaves a half-running write racing
+    the caller's cleanup)."""
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(4, len(fns))) as pool:
+        futs = [pool.submit(fn) for fn in fns]
+        return [f.result() for f in futs]

@@ -11,20 +11,26 @@ Scale notes (100 TB stance):
 - ingest declares the schema (no inference scan) and repartitions right
   after the (non-splittable .gz) landing read;
 - quality/trusted are narrow projections — no shuffle at all;
-- every dim build is DISTINCT over a low-cardinality key: the partial
-  aggregate collapses each map task's output to ≤|domain| rows, so the
-  shuffle is bytes per partition regardless of fact-table size.
+- the 15 dims come from ONE aggregate over trusted, collected to the
+  driver as one row holding each dim's sorted distinct non-null codes,
+  then one literal-frame write per dim. Each map task's partial sets and
+  that row hold ≤|distinct codes| values per dim, so the shuffle and the
+  driver read are bounded by the dims' sizes, never by fact-table size.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from data_engineer_development_spark.cache import overlap
 from data_engineer_development_spark.catalog import create_zone, materialize
 from data_engineer_development_spark.functions import (
     decode_map,
+    jvm_rows_df,
     sentinel_to_null,
     split_date_parts_to_date,
 )
@@ -106,18 +112,6 @@ def quality_select(raw: DataFrame) -> DataFrame:
     return raw.select(*cols)
 
 
-def build_dim(trusted: DataFrame, key: str, mapping: dict) -> DataFrame:
-    """One dimension table (export_svg.py:275-293 shape):
-    SELECT DISTINCT(key), CASE decode ... WHERE key IS NOT NULL ORDER BY key.
-    CASE has no ELSE ⇒ unknown codes decode to NULL (A1+F1+P4+O1)."""
-    return (
-        trusted.filter(F.col(key).isNotNull())
-        .select(F.col(key), decode_map(key, mapping).alias(f"{key}_NAME"))
-        .distinct()
-        .orderBy(key)
-    )
-
-
 def run_civil_cases_pipeline(
     spark: SparkSession,
     landing_path: str,
@@ -169,30 +163,31 @@ def run_civil_cases_pipeline(
 
     @pipe.stage("create_dimensions_tables")
     def _dims(s: SparkSession) -> None:  # export_svg.py:270-701 (15 CTAS)
-        # The reference DAG runs the 15 dim CTAS as independent parallel
-        # Airflow tasks — mirror that by submitting the (independent) write
-        # jobs from a thread pool; Spark's scheduler interleaves them. The
-        # shared trusted scan is cached once instead of 15 disk scans, and
-        # each ≤100-row code→name dim coalesces to a single part file — the
-        # layout a broadcast-joined dim wants at any scale.
-        from concurrent.futures import ThreadPoolExecutor
+        # Each reference CTAS is SELECT DISTINCT key, CASE … WHERE key IS
+        # NOT NULL ORDER BY key. At this scale a dim build costs its Spark
+        # job constants, not its rows, so all 15 read trusted in ONE
+        # aggregate: collect_set drops NULLs (the WHERE) and array_sort is
+        # Spark's own ORDER BY ordering. Each dim is then a JVM literal
+        # frame decoded by the same decode_map and written as one part
+        # file — the layout a broadcast-joined dim wants at any scale.
+        # The 15 builds and writes overlap like the reference's parallel
+        # Airflow tasks; building inside the workers overlaps the per-row
+        # literal construction's py4j round trips too.
+        trusted = s.table(f"{z['trusted']}.civil_cases")
+        types = dict(trusted.dtypes)
+        codes = trusted.agg(
+            *[F.array_sort(F.collect_set(k)).alias(k) for k in DIM_DECODES]
+        ).collect()[0]
 
-        trusted = s.table(f"{z['trusted']}.civil_cases").persist()
-        trusted.count()  # materialize the cache before the parallel fan-out
-        try:
-            with ThreadPoolExecutor(max_workers=8) as pool:
-                futs = [
-                    pool.submit(
-                        materialize,
-                        build_dim(trusted, key, mapping).coalesce(1),
-                        f"{z['dimensions']}.Dim{key.capitalize()}",
-                    )
-                    for key, mapping in DIM_DECODES.items()
-                ]
-                for f in futs:
-                    f.result()
-        finally:
-            trusted.unpersist()
+        def write(key: str, mapping: dict) -> None:
+            dim = jvm_rows_df(
+                s, f"{key} {types[key]}", [(c,) for c in codes[key]]
+            ).select(key, decode_map(key, mapping).alias(f"{key}_NAME"))
+            materialize(
+                dim.coalesce(1), f"{z['dimensions']}.Dim{key.capitalize()}"
+            )
+
+        overlap([partial(write, key, m) for key, m in DIM_DECODES.items()])
 
     return pipe
 

@@ -33,6 +33,12 @@ _ALLOWED = {
                             "trainer), the same bounded control-plane "
                             "shape as Lloyd's centroid collect"),
     "catalog.py": (1, "SHOW TBLPROPERTIES — metadata rows, never data"),
+    "medallion.py": (1, "the dims stage's one aggregate over TRUSTED — "
+                        "ONE row holding, per dim, the sorted distinct "
+                        "non-null codes (≤ |distinct codes| per dim); the "
+                        "old per-dim path already coalesced each dim into "
+                        "one writer task, so a dim too large for this row "
+                        "was already too large for that task"),
     "operators/similarity.py": (7, "documented bounded brute-force path "
                                    "behind the LSH auto-switch cap; semdedup "
                                    "codebook seed collect (≤ k_cells rows, "

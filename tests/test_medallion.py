@@ -9,6 +9,10 @@ import datetime
 
 import pytest
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from data_engineer_development_spark.functions import decode_map
 from data_engineer_development_spark.medallion import (
     DIM_DECODES,
     QUALITY_SPEC,
@@ -16,6 +20,19 @@ from data_engineer_development_spark.medallion import (
     run_civil_cases_pipeline,
 )
 from data_engineer_development_spark.pipeline import split_sql_script
+
+
+def build_dim(trusted: DataFrame, key: str, mapping: dict) -> DataFrame:
+    """Reference oracle for one dimension table, the per-dim query of
+    export_svg.py:275-293: SELECT DISTINCT(key), CASE decode ... WHERE key
+    IS NOT NULL ORDER BY key. CASE has no ELSE, so unknown codes decode to
+    NULL (A1+F1+P4+O1)."""
+    return (
+        trusted.filter(F.col(key).isNotNull())
+        .select(F.col(key), decode_map(key, mapping).alias(f"{key}_NAME"))
+        .distinct()
+        .orderBy(key)
+    )
 
 
 def _mk_row(**over) -> dict:
@@ -30,16 +47,7 @@ def _mk_row(**over) -> dict:
     return base
 
 
-@pytest.fixture(scope="module")
-def landing_tsv(tmp_path_factory):
-    rows = [
-        _mk_row(),
-        _mk_row(CIRCUIT="-8", TRANSOFF="J", AMTREC="0", JUDGMENT="0",
-                FILEDATE="12/31/1999"),
-        _mk_row(CIRCUIT="11", DISP="20", NOS="110", ORIGIN="13",
-                STATUSCD="L", JURY="Q"),  # JURY='Q' outside decode domain
-        _mk_row(CIRCUIT="99"),  # out-of-domain circuit → NULL name
-    ]
+def _write_tsv(tmp_path_factory, rows: list[dict]) -> str:
     p = tmp_path_factory.mktemp("landing") / "cases.tsv"
     with open(p, "w") as f:
         f.write("\t".join(RAW_COLUMNS) + "\n")
@@ -48,16 +56,44 @@ def landing_tsv(tmp_path_factory):
     return str(p)
 
 
-@pytest.fixture(scope="module")
-def ran(spark, landing_tsv):
+def _run_pipeline(spark, landing: str, prefix: str):
     from tests.conftest import fresh_db
 
-    for zone in ("t_raw", "t_quality", "t_trusted", "t_dimensions"):
-        fresh_db(spark, zone)
-    pipe = run_civil_cases_pipeline(spark, landing_tsv, zone_prefix="t_")
+    for zone in ("raw", "quality", "trusted", "dimensions"):
+        fresh_db(spark, f"{prefix}{zone}")
+    pipe = run_civil_cases_pipeline(spark, landing, zone_prefix=prefix)
     results = pipe.run(spark)
     assert all(r.error is None for r in results), results
     return results
+
+
+@pytest.fixture(scope="module")
+def landing_tsv(tmp_path_factory):
+    return _write_tsv(tmp_path_factory, [
+        _mk_row(),
+        _mk_row(CIRCUIT="-8", TRANSOFF="J", AMTREC="0", JUDGMENT="0",
+                FILEDATE="12/31/1999"),
+        _mk_row(CIRCUIT="11", DISP="20", NOS="110", ORIGIN="13",
+                STATUSCD="L", JURY="Q"),  # JURY='Q' outside decode domain
+        _mk_row(CIRCUIT="99"),  # out-of-domain circuit → NULL name
+    ])
+
+
+@pytest.fixture(scope="module")
+def ran(spark, landing_tsv):
+    return _run_pipeline(spark, landing_tsv, "t_")
+
+
+@pytest.fixture(scope="module")
+def edge_ran(spark, tmp_path_factory):
+    """Dim columns at the edges of the decode: TRCLACT (bigint) and JURY
+    (string) hold only sentinels, so every trusted value is NULL; PROSE
+    (bigint) and TRMARB (string) hold only codes outside their domains."""
+    return _run_pipeline(spark, _write_tsv(tmp_path_factory, [
+        _mk_row(TRCLACT="-8", JURY="-8", PROSE="9", TRMARB="Z"),
+        _mk_row(TRCLACT="-8", JURY="-8", PROSE="7", TRMARB="Z"),
+        _mk_row(TRCLACT="-8", JURY="-8", PROSE="9", TRMARB="Y"),
+    ]), "te_")
 
 
 def test_all_stages_ran(ran):
@@ -122,6 +158,45 @@ def test_dim_decode_semantics(spark, ran):
 def test_all_15_dims_materialized(spark, ran):
     for key in DIM_DECODES:
         assert spark.catalog.tableExists(f"t_dimensions.Dim{key.capitalize()}"), key
+
+
+@pytest.mark.parametrize("prefix", ["t_", "te_"])
+def test_dims_equal_reference_oracle(spark, ran, edge_ran, prefix):
+    # every stored dim holds the reference query's rows in its order, with
+    # its schema
+    trusted = spark.table(f"{prefix}trusted.civil_cases")
+    for key, mapping in DIM_DECODES.items():
+        dim = spark.table(f"{prefix}dimensions.Dim{key.capitalize()}")
+        want = build_dim(trusted, key, mapping)
+        assert dim.schema == want.schema, key
+        assert dim.collect() == want.collect(), key
+
+
+def test_dims_edge_cases(spark, edge_ran):
+    for key, typ in (("TRCLACT", "bigint"), ("JURY", "string")):
+        dim = spark.table(f"te_dimensions.Dim{key.capitalize()}")
+        assert dim.dtypes == [(key, typ), (f"{key}_NAME", "string")], key
+        assert dim.count() == 0, key
+    # codes outside the decode domain keep their rows with a NULL name
+    for dim, want in (("DimProse", [(7, None), (9, None)]),
+                      ("DimTrmarb", [("Y", None), ("Z", None)])):
+        got = spark.table(f"te_dimensions.{dim}").collect()
+        assert [tuple(r) for r in got] == want, dim
+
+
+def test_dims_stage_job_budget(spark, ran):
+    # one aggregate over trusted (two jobs when AQE runs its map stage
+    # first) plus one write per dim, and no cache blocks held: counted by
+    # job-id range around the stage alone
+    pipe = run_civil_cases_pipeline(spark, "unused", zone_prefix="t_")
+    dims = dict(pipe.stages)["create_dimensions_tables"]
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keys())
+    first = jsc.sc().dagScheduler().numTotalJobs()
+    dims(spark)
+    jobs = jsc.sc().dagScheduler().numTotalJobs() - first
+    assert jobs <= 2 + len(DIM_DECODES), jobs
+    assert set(jsc.getPersistentRDDs().keys()) == persisted
 
 
 def test_sql_script_splitter():
